@@ -4,15 +4,19 @@ Spark-first: DataFrame/Catalyst for relational ops, Arrow-batched stateful
 operators for patterns, Structured Streaming for streams.
 """
 
-from .cep import ExecutionSiddhiStream, SiddhiCEP, SiddhiStream
-from .errors import (
+from . import _zipcache
+
+_zipcache.install()
+
+from .cep import ExecutionSiddhiStream, SiddhiCEP, SiddhiStream  # noqa: E402
+from .errors import (  # noqa: E402
     DuplicatedStreamException,
     SiddhiError,
     SiddhiParserException,
     SiddhiPlannerException,
     UndefinedStreamException,
 )
-from .schema import StreamSchema
+from .schema import StreamSchema  # noqa: E402
 
 __version__ = "0.1.0"
 

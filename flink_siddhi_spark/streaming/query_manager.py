@@ -15,6 +15,7 @@ import os
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame
 
 from ..errors import SiddhiError
@@ -30,6 +31,25 @@ class ManagedQuery:
     # enable()/restart: re-enabling then only pays the StreamingQuery start
     # (checkpoint resume), not a reparse + replan of the CQL text
     compiled_df: Optional[DataFrame] = None
+    # text of the exception the plan's last StreamingQuery terminated with;
+    # a failed plan is not re-launched until enable() or update()
+    failure: Optional[str] = None
+
+
+def _streaming_query(mq: ManagedQuery):
+    """The plan's StreamingQuery; None when stopped or a batch plan."""
+    h = mq.query_handle
+    return None if h is None or isinstance(h, DataFrame) else h
+
+
+def _record_failure(mq: ManagedQuery) -> None:
+    """Keep the exception a terminated StreamingQuery ended with."""
+    q = _streaming_query(mq)
+    if q is None or q.isActive:
+        return
+    exc = q.exception()
+    if exc is not None:
+        mq.failure = str(exc)
 
 
 class QueryManager:
@@ -83,8 +103,9 @@ class QueryManager:
 
     def enable(self, query_id: str) -> None:
         mq = self.queries.get(query_id)
-        if mq is None or mq.enabled:
+        if mq is None or (mq.enabled and mq.failure is None):
             return
+        mq.failure = None
         # reuse the plan compiled at add()/update(): a stopped StreamingQuery
         # restarts from its checkpoint off the SAME logical plan, so re-enable
         # pays only the sink start, never a reparse
@@ -100,34 +121,52 @@ class QueryManager:
 
     def ensure_running(self) -> None:
         """Restart every ENABLED plan whose sink is not currently active
-        (e.g. an availableNow sink that drained and terminated). Public
+        (e.g. an availableNow sink that drained and terminated). A plan whose
+        sink terminated with an exception is marked failed instead and is not
+        re-launched; ``enable()`` or ``update()`` clears the failure. Public
         drain-loop API: callers should use this + :meth:`drain` instead of
         reaching into ``queries``/``query_handle``."""
         if self.sink_fn is None:
             return
         for qid, mq in self.queries.items():
-            if mq.enabled and (
-                mq.query_handle is None
-                or (
-                    hasattr(mq.query_handle, "isActive")
-                    and not mq.query_handle.isActive
-                )
+            h = mq.query_handle
+            if not mq.enabled or isinstance(h, DataFrame) or (
+                h is not None and h.isActive
             ):
-                df = mq.compiled_df
-                if df is None:
-                    df = self.compile_fn(mq.plan_text)
-                    mq.compiled_df = df
-                if df.isStreaming:
-                    mq.query_handle = self.sink_fn(qid, df)
+                continue
+            _record_failure(mq)
+            if mq.failure is not None:
+                continue
+            df = mq.compiled_df
+            if df is None:
+                df = self.compile_fn(mq.plan_text)
+                mq.compiled_df = df
+            if df.isStreaming:
+                mq.query_handle = self.sink_fn(qid, df)
 
     def drain(self, timeout_secs: float = 120.0) -> None:
         """Block until every running sink terminates (availableNow sinks) or
         ``timeout_secs`` elapses per query. Starts are concurrent, so total
-        wall time is bounded by the slowest query, not the sum."""
+        wall time is bounded by the slowest query, not the sum. Waits for
+        every query, then raises one :class:`SiddhiError` naming each plan
+        that failed."""
         for mq in self.queries.values():
-            h = mq.query_handle
-            if h is not None and hasattr(h, "awaitTermination"):
-                h.awaitTermination(timeout_secs)
+            q = _streaming_query(mq)
+            if q is not None:
+                try:
+                    q.awaitTermination(timeout_secs)
+                except StreamingQueryException:
+                    pass  # recorded below; the other plans are still awaited
+                _record_failure(mq)
+        failed = self.failures()
+        if failed:
+            raise SiddhiError("streaming plan(s) failed: " + "; ".join(
+                f"'{qid}': {text}" for qid, text in failed.items()))
+
+    def failures(self) -> dict[str, str]:
+        """``{query_id: exception text}`` for every plan marked failed."""
+        return {qid: mq.failure for qid, mq in self.queries.items()
+                if mq.failure is not None}
 
     def _stop(self, mq: ManagedQuery) -> None:
         h = mq.query_handle

@@ -1371,6 +1371,73 @@ def test_control_lifecycle_output_sets(spark, tmp_path):
     qm.stop_all()
 
 
+def test_query_manager_failed_plan(spark, tmp_path):
+    """A plan whose query dies is marked failed with its cause and is not
+    re-launched by ensure_running(); drain() still waits for the healthy
+    plan, then raises one error naming the failed one. update() clears the
+    failure."""
+    import os
+
+    from flink_siddhi_spark.errors import SiddhiError
+    from flink_siddhi_spark.siddhiql.parser import parse_query
+    from flink_siddhi_spark.streaming.query_manager import QueryManager
+
+    src, out_root = tmp_path / "fail_in", tmp_path / "out"
+    os.makedirs(src)
+    spark.createDataFrame(
+        [(1, "x", 1.0, 1000), (2, "x", 2.0, 2000), (3, "x", 3.0, 3000)],
+        EVENT_SCHEMA,
+    ).coalesce(1).write.parquet(str(src / "f1"))
+
+    def compile_fn(plan_text):
+        cep = SiddhiCEP(spark)
+        cep.register_extension(
+            "test:boom",
+            lambda c: F.when(c == 2, F.raise_error(F.lit("deliberate failure")))
+            .otherwise(c),
+        )
+        stream = file_stream(spark, str(src / "f1"), EVENT_SCHEMA)
+        cep.register_stream("s", stream, "id", "name", "price", "timestamp",
+                            ts_field="timestamp")
+        return StreamingPlanner(cep.catalog, cep.extensions).compile_query(
+            parse_query(plan_text)
+        )
+
+    starts = []
+
+    def sink_fn(qid, df):
+        starts.append(qid)
+        return (
+            df.writeStream.format("json")
+            .option("path", str(out_root / qid))
+            .option("checkpointLocation", str(tmp_path / "ck" / qid))
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    qm = QueryManager(compile_fn, sink_fn=sink_fn)
+    qm.add("bad", "from s select test:boom(id) as id insert into O1")
+    qm.add("good", "from s select id insert into O2")
+    with pytest.raises(SiddhiError) as err:
+        qm.drain(60)
+    assert "'bad'" in str(err.value) and "deliberate failure" in str(err.value)
+    assert "'good'" not in str(err.value)
+    assert set(qm.failures()) == {"bad"}
+    assert {r.id for r in spark.read.json(str(out_root / "good")).collect()} == {1, 2, 3}
+
+    starts.clear()
+    qm.ensure_running()
+    assert starts == ["good"]  # the failed plan is not re-launched
+    with pytest.raises(SiddhiError, match="'bad'"):
+        qm.drain(60)
+
+    qm.update("bad", "from s select id insert into O1")
+    assert qm.failures() == {}
+    qm.drain(60)
+    assert qm.failures() == {}
+    qm.stop_all()
+
+
 def test_cql_auto_streaming_dispatch(spark, tmp_path):
     """round-5: cql() is mode-agnostic like the reference's single engine —
     a streaming-registered stream compiles on the StreamingPlanner
