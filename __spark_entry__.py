@@ -630,7 +630,7 @@ def q_sequence_quantifier(spark, sf_dir):
 
 def q_sequence_quant_chain(spark, sf_dir):
     # late round 10: quantified INTERIOR stage in a relaxed every-chain —
-    # dispatches the run_kernel_chain_quant kernel (operators/pattern.py).
+    # dispatches the run_kernel_chain_quants kernel (operators/pattern.py).
     # Greedy <1:2>: the first click after each view is always captured, the
     # second iff it precedes the completing purchase; the purchase that
     # completes is the first one after the FIRST click (min reached at 1).

@@ -559,7 +559,7 @@ def _streaming_throughput_bench(spark, sf_dir: str) -> dict:
                 "select e.user_id as user_id, e.event_id as error_id "
                 "insert into Out; end"
             ),
-            # the 3-step CQL funnel (late round 8: run_kernel3)
+            # the 3-step CQL funnel (run_kernel_chain)
             "cep_pattern_3step_10x": lambda: amp_cql_plan(
                 "partition with (user_id of events) begin "
                 "from every v = events[event_type == 'view'] "
@@ -610,7 +610,7 @@ def _streaming_throughput_bench(spark, sf_dir: str) -> dict:
                 "insert into Out; end"
             ),
             # late round 10: one quantified INTERIOR stage in a k>=3 chain
-            # now dispatches run_kernel_chain_quant (this CQL ran the
+            # now dispatches run_kernel_chain_quants (this CQL ran the
             # general per-row NFA before)
             "cep_pattern_quantchain_10x": lambda: amp_cql_plan(
                 "partition with (user_id of events) begin "

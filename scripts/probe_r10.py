@@ -4,7 +4,7 @@ that gained bucketed key grouping this round — ``retention_pairs_stream``,
 ``streaming_asof_enrich`` — plus the round-9 ``window_key_buckets`` generic
 adapter, which was parity-tested but never measured at probe scale.
 
-Same hot-key generator shape as probe_chain3_r9.py: user 1 at ~10%, rest
+Same hot-key generator shape as probe_patterns.py: user 1 at ~10%, rest
 over 100k users, ts-ordered 10ms steps, 4 waves -> maxFilesPerTrigger=8
 gives a 4-micro-batch drain (the per-key-visit floor regime bucketing
 amortizes).

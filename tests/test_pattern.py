@@ -192,7 +192,7 @@ def test_partitioned_pattern_on_events(cep, spark, sf_dir):
 
 def test_three_step_every_batch_kernel(cep, spark):
     """late round 8: the batch path dispatches `every A -> B -> C [within]`
-    to run_kernel3 (match_group's vectorized branch). Deterministic feed
+    to run_kernel_chain (match_group's vectorized branch). Deterministic feed
     with hand-computed expectations: each armed partial captures the FIRST
     later b then the FIRST c after that b; within bounds the full span."""
     rows = [
@@ -227,7 +227,7 @@ def test_three_step_every_batch_kernel(cep, spark):
 
 def test_chain_quant_mid_kernel_and_null_index(cep, spark):
     # late round 10: one quantified INTERIOR stage dispatches
-    # run_kernel_chain_quant on the batch path. Two arms per 'a':
+    # run_kernel_chain_quants on the batch path. Two arms per 'a':
     #  a1 (id=1@1s): b@2s captured, completion c@3s -> one b, b[1] NULL
     #  a2 (id=1@4s): b@5s and b@6s captured (greedy below m=2), c@7s
     # b[1] past the captured count must be NULL (Siddhi semantics; was an

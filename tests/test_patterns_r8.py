@@ -312,3 +312,32 @@ def test_streaming_plain_chain_first_attempt_across_batches(spark):
         for r in _batch_collect(spark, rows, PLAIN_CHAIN_CQL)
     )
     assert got == want, want
+
+
+FRACTIONAL_CQL = (
+    "partition with (name of s) begin "
+    "from every a = s[price > 1.5] -> b = s[price < 0.5] "
+    "select a.id as a_id, b.id as b_id insert into Out; end"
+)
+
+
+def test_streaming_filter_keeps_fractional_values(spark):
+    """Streaming pattern filters read a double column as float64: an int64
+    cast would truncate 1.7 to 1 and 0.3 to 0, so `price > 1.5` and
+    `price < 0.5` would both miss and the stream would match nothing
+    where batch matches (0, 1)."""
+    rows = [(0, "x", 1_000, 1.7), (1, "x", 2_000, 0.3), (2, "x", 3_000, 1.2)]
+    root = tempfile.mkdtemp(prefix="frac_")
+    try:
+        got = sorted(
+            (r.a_id, r.b_id)
+            for r in _run_streaming(spark, [rows[:1], rows[1:]],
+                                    FRACTIONAL_CQL, root)
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    want = sorted(
+        (r.a_id, r.b_id) for r in _batch_collect(spark, rows, FRACTIONAL_CQL)
+    )
+    assert want == [(0, 1)]
+    assert got == want
